@@ -124,11 +124,17 @@ class TestSamplersThroughCSPRNG:
         assert chi2 < 40, (counts, exp)
 
     def test_scalar_exact_samplers_run(self, csprng_on):
-        vals = [samplers.geometric_exact(Fraction(3, 2)) for _ in range(20)]
-        assert all(isinstance(v, int) for v in vals)  # two-sided: any sign
-        dg = [samplers.discrete_gaussian_exact(Fraction(4)) for _ in range(20)]
-        assert all(isinstance(v, int) for v in dg)
-        assert isinstance(samplers.bernoulli_exp(Fraction(1, 3)), bool)
+        from tumult_core_spark.measurements.noise import (
+            AddDiscreteGaussianNoise,
+            AddGeometricNoise,
+        )
+
+        geom = AddGeometricNoise(Fraction(3, 2))
+        vals = [geom(0) for _ in range(20)]
+        assert all(isinstance(v, np.int64) for v in vals)  # two-sided: any sign
+        dgauss = AddDiscreteGaussianNoise(Fraction(4))
+        dg = [dgauss(0) for _ in range(20)]
+        assert all(isinstance(v, np.int64) for v in dg)
 
     def test_discrete_gaussian_exact_vec_runs(self, csprng_on):
         x = samplers.discrete_gaussian_exact_vec(Fraction(2), 5_000)

@@ -51,10 +51,63 @@ def chi2_pvalue(observed, expected):
     return 0.5 * math.erfc(z / math.sqrt(2))
 
 
+# ---------------------------------------------------------------------------
+# Float NumPy samplers: plain inverse-CDF / rejection baselines that
+# check the statistical harness itself against the analytic laws.  No
+# mechanism draws from them (they carry the float-artifact structure
+# the certified samplers exist to avoid).
+# ---------------------------------------------------------------------------
+
+
+def laplace(scale: float, size: int) -> np.ndarray:
+    u = samplers.rng().random(size) - 0.5
+    return -scale * np.sign(u) * np.log1p(-2.0 * np.abs(u))
+
+
+def gaussian(sigma_squared: float, size: int) -> np.ndarray:
+    return samplers.rng().normal(0.0, float(np.sqrt(sigma_squared)), size)
+
+
+def _geometric_failures(q: float, size: int, g) -> np.ndarray:
+    """Geometric number-of-failures, P[k] = (1-q) q^k, by inversion."""
+    u = g.random(size)
+    np.clip(u, np.finfo(float).tiny, None, out=u)
+    return np.floor(np.log(u) / np.log(q)).astype(np.int64)
+
+
+def two_sided_geometric(scale: float, size: int) -> np.ndarray:
+    """Difference of two iid geometrics: P[X=k] ∝ e^{-|k|/scale}."""
+    q = float(np.exp(-1.0 / scale))
+    g = samplers.rng()
+    return _geometric_failures(q, size, g) - _geometric_failures(q, size, g)
+
+
+def discrete_gaussian(sigma_squared: float, size: int) -> np.ndarray:
+    """N_Z(0, sigma^2) by rejection from the discrete Laplace proposal
+    (CKS'20, Algorithm 3), batched with an adaptive overdraw."""
+    sigma = float(np.sqrt(sigma_squared))
+    t = int(np.floor(sigma)) + 1
+    out = np.empty(size, dtype=np.int64)
+    filled = 0
+    g = samplers.rng()
+    overdraw = 2.2
+    while filled < size:
+        n = max(1024, int((size - filled) * overdraw))
+        y = two_sided_geometric(float(t), n)
+        z = (np.abs(y) - sigma_squared / t) ** 2 / (-2.0 * sigma_squared)
+        keep = y[g.random(n) < np.exp(z)]
+        if len(keep):
+            overdraw = min(20.0, 1.2 / max(len(keep) / n, 0.05))
+        take = min(len(keep), size - filled)
+        out[filled : filled + take] = keep[:take]
+        filled += take
+    return out
+
+
 class TestSamplerDistributions:
     def test_laplace_ks(self):
         scale = 2.5
-        s = samplers.laplace(scale, N)
+        s = laplace(scale, N)
 
         def cdf(x):
             x = np.asarray(x, dtype=float)
@@ -66,7 +119,7 @@ class TestSamplerDistributions:
         assert p > P_THRESHOLD, f"KS p={p}"
 
     def test_gaussian_ks(self):
-        s = samplers.gaussian(4.0, N)
+        s = gaussian(4.0, N)
 
         def cdf(x):
             return 0.5 * (1 + np.vectorize(math.erf)(np.asarray(x) / (2 * math.sqrt(2))))
@@ -76,7 +129,7 @@ class TestSamplerDistributions:
 
     def test_two_sided_geometric_chi2(self):
         alpha = 3.0
-        s = samplers.two_sided_geometric(alpha, N)
+        s = two_sided_geometric(alpha, N)
         lo, hi = -30, 30
         support = np.arange(lo, hi + 1)
         observed = np.array([(s == k).sum() for k in support], dtype=float)
@@ -86,7 +139,7 @@ class TestSamplerDistributions:
 
     def test_discrete_gaussian_chi2(self):
         s2 = 6.0
-        s = samplers.discrete_gaussian(s2, N)
+        s = discrete_gaussian(s2, N)
         lo, hi = -15, 15
         support = np.arange(lo, hi + 1)
         observed = np.array([(s == k).sum() for k in support], dtype=float)
@@ -147,7 +200,10 @@ class TestSamplerDistributions:
     def test_exact_geometric_matches_distribution(self):
         from fractions import Fraction
 
-        s = np.array([samplers.geometric_exact(Fraction(2)) for _ in range(4000)])
+        from tumult_core_spark.measurements.noise import AddGeometricNoise
+
+        mech = AddGeometricNoise(Fraction(2))
+        s = np.array([mech(0) for _ in range(4000)])
         support = np.arange(-8, 9)
         observed = np.array([(s == k).sum() for k in support], dtype=float)
         expected = double_sided_geometric_pmf(support, 2.0) * len(s)
@@ -157,9 +213,10 @@ class TestSamplerDistributions:
     def test_exact_discrete_gaussian_matches_distribution(self):
         from fractions import Fraction
 
-        s = np.array(
-            [samplers.discrete_gaussian_exact(Fraction(3)) for _ in range(4000)]
-        )
+        from tumult_core_spark.measurements.noise import AddDiscreteGaussianNoise
+
+        mech = AddDiscreteGaussianNoise(Fraction(3))
+        s = np.array([mech(0) for _ in range(4000)])
         support = np.arange(-8, 9)
         observed = np.array([(s == k).sum() for k in support], dtype=float)
         expected = discrete_gaussian_pmf(support, 3.0) * len(s)
@@ -167,11 +224,13 @@ class TestSamplerDistributions:
         assert p > P_THRESHOLD, f"chi2 p={p}"
 
     def test_exact_laplace_ks(self):
-        from tumult_core_spark import exact_sampling as es
+        from tumult_core_spark.domains import NumpyFloatDomain
+        from tumult_core_spark.measurements.noise import AddLaplaceNoise
 
         scale = 2.5
         n = 3000
-        s = np.array([es.sample_laplace(0.0, scale) for _ in range(n)])
+        mech = AddLaplaceNoise(NumpyFloatDomain(), "5/2")
+        s = np.array([mech(0.0) for _ in range(n)])
 
         def cdf(x):
             x = np.asarray(x, dtype=float)
@@ -183,10 +242,12 @@ class TestSamplerDistributions:
         assert p > P_THRESHOLD, f"KS p={p}"
 
     def test_exact_gaussian_ks(self):
-        from tumult_core_spark import exact_sampling as es
+        from tumult_core_spark.domains import NumpyFloatDomain
+        from tumult_core_spark.measurements.noise import AddGaussianNoise
 
         n = 400
-        s = np.array([es.sample_gaussian(4.0) for _ in range(n)])
+        mech = AddGaussianNoise(NumpyFloatDomain(), 4)
+        s = np.array([mech(0.0) for _ in range(n)])
 
         def cdf(x):
             return 0.5 * (
@@ -368,18 +429,23 @@ class TestSamplerDistributions:
 
     def test_exact_samplers_huge_denominators(self):
         # Fraction(float) parameters have ~2^52 denominators, squared to
-        # ~2^104 inside the acceptance gamma; the exact Bernoulli must
-        # handle arbitrary-precision denominators (regression: NumPy
-        # integers() raised ValueError past int64).
+        # ~2^104 inside the exact acceptance gamma of an uncertain draw;
+        # the mechanisms must sample at such parameters (regression:
+        # NumPy integers() raised ValueError past int64).
         from fractions import Fraction
 
-        s2 = Fraction(2.3456789012345)  # denominator ~2^51
-        draws = [samplers.discrete_gaussian_exact(s2) for _ in range(50)]
-        assert all(isinstance(d, int) for d in draws)
+        from tumult_core_spark.measurements.noise import (
+            AddDiscreteGaussianNoise,
+            AddGeometricNoise,
+        )
+
+        dgauss = AddDiscreteGaussianNoise(Fraction(2.3456789012345))  # den ~2^51
+        draws = [dgauss(0) for _ in range(50)]
+        assert all(isinstance(d, np.int64) for d in draws)
         assert any(d != 0 for d in draws)
-        g = [samplers.geometric_exact(Fraction(1.9999999999991)) for _ in range(50)]
+        geom = AddGeometricNoise(Fraction(1.9999999999991))
+        g = [geom(0) for _ in range(50)]
         assert any(x != 0 for x in g)
-        assert samplers._randbelow(1 << 200) < (1 << 200)
 
 
 class TestFullSparkPathNoise:

@@ -397,6 +397,23 @@ class TestMaps:
         assert out.columns == ["k", "v", "klen"]
         assert out.filter("klen = k * 10").count() == kv.count()
 
+    def test_widen_falls_back_to_round_robin_on_unhashable_column(self, spark):
+        """xxhash64 cannot hash a MapType column: the widen must take
+        the round-robin repartition instead and keep every row."""
+        from tumult_core_spark.transformations.map import _widen_for_python
+
+        df = spark.createDataFrame(
+            [(i, {"k": i}) for i in range(40)], "id long, m map<string,long>"
+        ).coalesce(1)
+        target = spark.sparkContext.defaultParallelism
+        assert target >= 2  # the input is narrow enough to widen
+        out = _widen_for_python(df)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" in plan
+        assert out.rdd.getNumPartitions() == target
+        assert sorted(r["id"] for r in out.collect()) == list(range(40))
+        assert all(r["m"] == {"k": r["id"]} for r in out.collect())
+
     def test_flatmap_truncates(self, spark, kv):
         rt = RowToRowsTransformation(
             SparkRowDomain({"k": INT, "v": STR}),

@@ -20,13 +20,13 @@ extreme-scale and RNG-lifecycle corners:
   coverage) — naive ``scale * log(u)`` samplers concentrate on a
   sparse achievable set.
 * **Extreme scales**: subnormal/near-subnormal sigma^2 must route
-  through the scalar interval sampler (the r17-fixed guard: the old
+  through the per-value interval sampler (the r17-fixed guard: the old
   ``sigma_squared < _EXTREME_SCALE**2`` underflowed to 0.0 and never
   fired, while dd.sqrt's error at 1e-300 is 2^-79 — above the 2^-88
   certification budget); huge scales must fail closed (OverflowError)
   rather than emit int64-wrapped noise.
-* **Scalar samplers at large scale**: the r17 band-inversion rewrite
-  must draw in O(1) for any scale (the old Bernoulli-counting loop
+* **Single draws at large scale**: a mechanism called on one value
+  must draw in O(1) for any scale (an earlier Bernoulli-counting loop
   cost O(scale) and tripped a 1e7 magnitude cap, a ~37%-per-draw crash
   at scale 1e7).
 * **RNG independence across fork** (executor workers): forked children
@@ -286,29 +286,31 @@ class TestExtremeScales:
 
 class TestScalarSamplersAtScale:
     def test_geometric_exact_large_scale_terminates_fast(self):
-        """r17: band inversion replaced the O(scale) Bernoulli loop —
-        a single draw at scale 1e7 previously crashed the 1e7 magnitude
-        cap with probability ~e^-1 and cost minutes otherwise."""
+        """Band inversion draws in O(1): a single draw at scale 1e7
+        once crashed a 1e7 magnitude cap with probability ~e^-1 and
+        cost minutes otherwise."""
         import time
 
+        from tumult_core_spark.measurements.noise import AddGeometricNoise
+
+        mech = AddGeometricNoise(10**7)
         t0 = time.time()
-        vals = [samplers.geometric_exact(10**7) for _ in range(20)]
+        vals = [mech(0) for _ in range(20)]
         assert time.time() - t0 < 10.0
         mags = np.abs(np.array(vals, dtype=float))
         assert mags.max() > 1e6  # typical |k| ~ scale
         assert mags.max() < 40 * 1e7
-        # big-int support: scales whose draws exceed int64 still work
-        v = samplers.geometric_exact(Fraction(10**20))
-        assert isinstance(v, int) and abs(v) < 40 * 10**20
 
     def test_geometric_exact_distribution_unchanged(self):
-        """chi^2 pin that the inversion rewrite preserves the law."""
+        """chi^2 pin of the single-value geometric law."""
         from tests.test_noise_distributions import (
             chi2_pvalue,
             double_sided_geometric_pmf,
         )
+        from tumult_core_spark.measurements.noise import AddGeometricNoise
 
-        s = np.array([samplers.geometric_exact(Fraction(2)) for _ in range(4000)])
+        mech = AddGeometricNoise(Fraction(2))
+        s = np.array([mech(0) for _ in range(4000)])
         support = np.arange(-8, 9)
         observed = np.array([(s == k).sum() for k in support], dtype=float)
         expected = double_sided_geometric_pmf(support, 2.0) * len(s)
@@ -317,8 +319,11 @@ class TestScalarSamplersAtScale:
     def test_discrete_gaussian_exact_large_sigma_fast(self):
         import time
 
+        from tumult_core_spark.measurements.noise import AddDiscreteGaussianNoise
+
+        mech = AddDiscreteGaussianNoise(Fraction(10**12))
         t0 = time.time()
-        vals = [samplers.discrete_gaussian_exact(Fraction(10**12)) for _ in range(10)]
+        vals = [mech(0) for _ in range(10)]
         assert time.time() - t0 < 20.0
         mags = np.abs(np.array(vals, dtype=float))
         assert mags.max() > 1e5 and mags.max() < 10 * 1e6  # sigma = 1e6

@@ -5,14 +5,12 @@ factories, scalar noise mechanism classes, metric edge classes,
 sources/io round-trips, domain descriptors, and the exact
 distribution/double-double helper functions."""
 
-import math
-from fractions import Fraction
-
 import numpy as np
 import pytest
 
 from tumult_core_spark.domains import (
     DictDomain,
+    NumpyFloatDomain,
     SparkDataFrameDomain,
     SparkFloatColumnDescriptor,
     SparkIntegerColumnDescriptor,
@@ -20,6 +18,12 @@ from tumult_core_spark.domains import (
     SparkStringColumnDescriptor,
 )
 from tumult_core_spark.exact_number import ExactNumber
+from tumult_core_spark.measurements.noise import (
+    AddDiscreteGaussianNoise,
+    AddGaussianNoise,
+    AddGeometricNoise,
+    AddLaplaceNoise,
+)
 from tumult_core_spark.metrics import (
     AddRemoveKeys,
     IfGroupedBy,
@@ -270,6 +274,57 @@ class TestScalarMechanismsDirect:
         out = series(pd.Series([1.0, 2.0, 3.0]))
         assert list(out) == [1.0, 2.0, 3.0]
 
+    @pytest.mark.parametrize(
+        "make, dtype, integral",
+        [
+            (lambda p: AddLaplaceNoise(NumpyFloatDomain(), p), np.float64, False),
+            (lambda p: AddGaussianNoise(NumpyFloatDomain(), p), np.float64, False),
+            (AddGeometricNoise, np.int64, True),
+            (AddDiscreteGaussianNoise, np.int64, True),
+        ],
+        ids=["laplace", "gaussian", "geometric", "discrete_gaussian"],
+    )
+    def test_one_sampler_per_mechanism(self, make, dtype, integral, monkeypatch):
+        """A single-value call is the vectorized sampler on a length-1
+        array: same return dtype, scale 0 is the identity, and an
+        infinite scale behaves the same on both entry points."""
+        mech = make(3)
+        assert mech.output_type == ("long" if integral else "double")
+        assert not mech.adds_no_noise
+        cls = type(mech)
+        original = cls.add_noise_to_array
+        seen = []
+
+        def spy(self, values):
+            seen.append(np.array(values))
+            return original(self, values)
+
+        monkeypatch.setattr(cls, "add_noise_to_array", spy)
+        out = mech(5)
+        assert type(out) is dtype
+        assert len(seen) == 1 and seen[0].tolist() == [5]
+        assert original(mech, np.array([5, 6])).dtype == dtype
+        monkeypatch.undo()
+
+        zero = make(0)
+        assert zero.adds_no_noise
+        assert type(zero(7)) is dtype and zero(7) == 7
+        assert zero.add_noise_to_array(np.array([1, 2, 3])).tolist() == [1, 2, 3]
+
+        inf = make(float("inf"))
+        assert inf.privacy_function(1) == ExactNumber(0)
+        if integral:
+            with pytest.raises(ValueError, match="infinite") as scalar_err:
+                inf(1)
+            with pytest.raises(ValueError, match="infinite") as vec_err:
+                inf.add_noise_to_array(np.array([1]))
+            assert str(scalar_err.value) == str(vec_err.value)
+        else:
+            # data-independent output: +-inf on both entry points
+            with np.errstate(all="ignore"):
+                assert np.isinf(inf(1))
+                assert np.isinf(inf.add_noise_to_array(np.array([1.0]))).all()
+
     def test_two_sided_geometric_exact_cmf_roundtrip(self):
         from tumult_core_spark.utils.distributions import (
             double_sided_geometric_cmf_exact,
@@ -300,14 +355,6 @@ class TestScalarMechanismsDirect:
         with pytest.raises(ValueError, match=r"\(0, 1\]"):
             inv(0, ExactNumber(2))
         assert inv(1, ExactNumber(0)) == 0
-
-    def test_bernoulli_exp_mean(self):
-        from tumult_core_spark.samplers import bernoulli_exp
-
-        gamma = Fraction(1, 2)
-        n = 4000
-        mean = sum(bernoulli_exp(gamma) for _ in range(n)) / n
-        assert abs(mean - math.exp(-0.5)) < 0.05
 
 
 class TestMetricEdges:
@@ -598,3 +645,4 @@ class TestBenchCompactLine:
         line2 = compact_line(out)
         assert len(line2) < 2000
         assert json.loads(line2)["metric"] == "headline_queries_wall_clock"
+

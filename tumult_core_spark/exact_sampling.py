@@ -4,30 +4,26 @@ selection.
 Port of the reference's Arb-based design (``random/laplace.py:12-49``,
 ``random/continuous_gaussian.py:13-97``, ``random/uniform.py:34``,
 ``random/inverse_cdf.py``, ``pandas_measurements/series.py:374-484``)
-onto ``mpmath.iv`` interval arithmetic (mpmath ships with sympy, which
-is already a dependency) instead of vendored GMP/MPFR/Arb ctypes.
+onto vectorized double-double arithmetic (``dd.py``) backed by
+``mpmath.iv`` interval arithmetic (mpmath ships with sympy, which is
+already a dependency) instead of vendored GMP/MPFR/Arb ctypes.
 
-The common pattern — inverse transform sampling with progressively
-refined randomness:
+``laplace_exact_vec`` and ``gaussian_exact_vec`` are the only samplers
+of the Laplace and Gaussian mechanisms (``measurements/noise.py``).
+Each reveals a uniform prefix per element, evaluates the monotone
+transform over the whole prefix interval with a rigorous error margin,
+and returns the head double wherever every real in the enclosure
+rounds to it.  The rare uncertain draws continue the SAME prefix with
+more random bits through a per-value interval loop
+(``_resolve_laplace``, ``_resolve_gaussian_pair``) until the rounding
+is determined.  Because the returned double is determined by the true
+real-valued sample, the result carries none of the float-artifact
+structure that naive ``scale * log(u)``-style samplers leak (the
+vulnerability class in the reference's
+``doc/topic-guides/known-vulnerabilities.rst``).
 
-1. draw ``step`` more random bits, defining the dyadic probability
-   interval ``p in [bits/2^n, (bits+1)/2^n]``;
-2. evaluate the (monotone) inverse CDF at both endpoints in rigorous
-   interval arithmetic at ~n bits of working precision;
-3. if every real in the image interval rounds to the same IEEE double,
-   return it; otherwise draw more bits and repeat.
-
-Because the returned double is determined by the true real-valued
-sample, the result carries none of the float-artifact structure that
-naive ``scale * log(u)``-style samplers leak (the vulnerability class
-in the reference's ``doc/topic-guides/known-vulnerabilities.rst``).
-
-Uniform needs no transcendental functions, so it runs entirely in
-exact ``Fraction`` arithmetic.  Laplace uses ``iv.log``.  Gaussian
-needs ``erfinv``, which ``mpmath.iv`` lacks: the candidate comes from
-scalar ``mpmath.erfinv`` and is then *verified* (and widened if
-needed) through the rigorous ``iv.erf`` enclosure, using monotonicity
-of ``erf`` — so the final interval is certified, not trusted.
+``sample_uniform`` needs no transcendental functions, so it runs
+entirely in exact ``Fraction`` arithmetic.
 
 ``select_noisy_argmax`` is the exponential-mechanism selection: a
 vectorized NumPy pass brackets every candidate's Gumbel-noised score
@@ -91,7 +87,7 @@ def sample_uniform(lower: float, upper: float, step_size: int = 63) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Interval-arithmetic inverse-CDF samplers (Laplace, Gaussian)
+# Rigorous per-value resolution (interval arithmetic)
 # ---------------------------------------------------------------------------
 
 
@@ -134,8 +130,8 @@ def _resolve_laplace(
     """Finish a Laplace draw whose uniform prefix ``bits/2^n`` is
     already revealed: extend the SAME prefix until the icdf image
     interval rounds to a unique double.  (Continuing the prefix — not
-    resampling — is what keeps the vectorized fast path exactly
-    distribution-equal to the scalar sampler.)"""
+    resampling — is what keeps the vectorized fast path's output law
+    exact.)  ``n == 0`` starts a draw from scratch."""
     import mpmath
 
     iv = mpmath.iv
@@ -158,115 +154,13 @@ def _resolve_laplace(
         iv.prec = old_prec
 
 
-def sample_laplace(mu: float, b: float, step_size: int = 63) -> float:
-    """Laplace(mu, b) draw via rigorous interval inverse-CDF
-    (reference ``random/laplace.py:12-49``)."""
-    if not b >= 0:
-        raise ValueError("scale must be >= 0")
-    if b == 0:
-        return float(mu)
-    return _resolve_laplace(mu, b, 0, 0, step_size)
-
-
-def _iv_erf(y, iv):
-    """Rigorous interval enclosure of erf(y).
-
-    ``mpmath.iv.erf`` (hypergeometric 1F1) fails to converge for
-    moderate arguments, so this uses the cancellation-free series
-
-        erf(y) = (2/sqrt(pi)) y e^{-y^2} sum_k (2y^2)^k / (1*3*...*(2k+1))
-
-    whose terms are all positive; the truncation error is enclosed by
-    a geometric tail bound once the term ratio 2y^2/(2k+3) < 1/2.
-    Everything runs in iv arithmetic, so the result is certified.
-    """
-    two_y2 = iv.mpf(2) * y * y
-    term = iv.mpf(1)
-    total = iv.mpf(1)
-    k = 0
-    tiny = iv.mpf(1) / iv.mpf(1 << (iv.prec + 5))
-    while True:
-        k += 1
-        term = term * two_y2 / iv.mpf(2 * k + 1)
-        total = total + term
-        ratio = two_y2 / iv.mpf(2 * k + 3)
-        if ratio.b < 0.5 and term.b < tiny.a:
-            # tail <= term * ratio / (1 - ratio) <= term (since ratio < 1/2)
-            total = total + iv.mpf([0, term.b])
-            break
-        if k > 10000:
-            raise RuntimeError("erf series failed to converge")
-    return (iv.mpf(2) / iv.sqrt(iv.pi)) * y * iv.exp(-y * y) * total
-
-
-def _erfinv_enclosure(x_num: int, x_den_log2: int, prec: int, iv, mpmath):
-    """Certified enclosure of erfinv(x) for the exact dyadic
-    x = x_num/2^x_den_log2 in (-1, 1).
-
-    Candidate from scalar mpmath.erfinv at working precision, then
-    verified through the rigorous series erf enclosure: by
-    monotonicity, erfinv(x) ∈ [ylo, yhi] iff erf(ylo) <= x <=
-    erf(yhi).  The margin doubles until both one-sided checks certify.
-    """
-    x = _iv_dyadic(iv, x_num, x_den_log2)
-    # all candidate arithmetic at full working precision — at default
-    # (53-bit) precision y±eps collapses onto y for eps < ulp(y) and
-    # the certification can never move past y's own rounding error
-    with mpmath.workprec(prec + 30):
-        y = mpmath.erfinv(mpmath.mpf(x_num) / mpmath.mpf(1 << x_den_log2))
-        eps = mpmath.ldexp(1, -prec - 5) * (abs(y) + 1)
-        for _ in range(64):
-            ylo, yhi = y - eps, y + eps
-            lo_ok = _iv_erf(iv.mpf(ylo), iv).b <= x.a
-            hi_ok = _iv_erf(iv.mpf(yhi), iv).a >= x.b
-            if lo_ok and hi_ok:
-                return iv.mpf([ylo, yhi])
-            eps = eps * 2
-    raise RuntimeError("erfinv enclosure failed to certify")
-
-
-def sample_gaussian(
-    sigma_squared: float, mu: float = 0.0, step_size: int = 63
-) -> float:
-    """N(mu, sigma^2) draw via certified interval inverse-CDF
-    (reference ``random/continuous_gaussian.py:13-97``):
-    ``mu + sqrt(sigma^2) sqrt(2) erfinv(2p - 1)``."""
-    import mpmath
-
-    if not sigma_squared >= 0:
-        raise ValueError("sigma_squared must be >= 0")
-    if sigma_squared == 0:
-        return float(mu)
-    iv = mpmath.iv
-    old_prec = iv.prec
-    n = 0
-    bits = 0
-    try:
-        while True:
-            bits = (bits << step_size) | _randbits(step_size)
-            n += step_size
-            if bits == 0 or bits + 1 == (1 << n):
-                continue
-            iv.prec = n + 20
-            scale = iv.sqrt(iv.mpf(sigma_squared)) * iv.sqrt(iv.mpf(2))
-            # 2p - 1 at p = bits/2^n is the exact dyadic (2*bits - 2^n)/2^n
-            lo = _erfinv_enclosure(2 * bits - (1 << n), n, n + 20, iv, mpmath)
-            hi = _erfinv_enclosure(2 * (bits + 1) - (1 << n), n, n + 20, iv, mpmath)
-            out = iv.mpf(mu) + scale * iv.mpf([lo.a, hi.b])
-            a, c = _endpoint_float(out.a), _endpoint_float(out.b)
-            if a == c:
-                return a
-    finally:
-        iv.prec = old_prec  # global mpmath state; see _resolve_laplace
-
-
 # ---------------------------------------------------------------------------
-# Vectorized certified continuous samplers (the column hot path)
+# Certified continuous samplers (Laplace, Gaussian)
 # ---------------------------------------------------------------------------
 #
-# Same guarantee as the scalar samplers above — the returned double is
-# determined by the true real-valued sample (rounding pushforward of
-# the continuous distribution) — but over a whole NumPy array at once:
+# The returned double is determined by the true real-valued sample
+# (rounding pushforward of the continuous distribution), over a whole
+# NumPy array at once:
 #
 # 1. reveal a 106-bit uniform prefix per element (two 53-bit draws,
 #    exactly representable as a double-double);
@@ -276,8 +170,9 @@ def sample_gaussian(
 #    (derivative-over-interval + arithmetic error);
 # 3. accept elements whose margin-widened enclosure rounds to a unique
 #    double (all but ~1e-11 of draws); the rest CONTINUE THE SAME
-#    PREFIX through the scalar interval loop, so the output law is
-#    exactly the scalar sampler's, not an approximation of it.
+#    PREFIX through a per-value interval loop (``_resolve_laplace``,
+#    ``_resolve_gaussian_pair``), so the output law is exact, not an
+#    approximation.
 
 _TWO53F = float(1 << 53)
 _H106 = 2.0**-106  # prefix interval width
@@ -285,7 +180,7 @@ _ARITH_REL = 2.0**-88  # conservative dd pipeline error budget
 _SLOP = 1.000001  # absorbs float rounding of the margin arithmetic itself
 # below this scale the double-double error-free transformations start
 # underflowing into subnormals and the 2^-88 budget no longer holds;
-# such (absurd, but legal) scales route every draw through the scalar
+# such (absurd, but legal) scales route every draw through the per-value
 # interval loop instead of the vectorized fast path
 _EXTREME_SCALE = 1e-280
 # dd.sqrt's separate floor: its internal two_prod(s0, s0) error leg
@@ -354,7 +249,7 @@ def laplace_exact_vec(mu: np.ndarray, b: float) -> np.ndarray:
     """Certified Laplace(mu_i, b) draws, one per element of ``mu``.
 
     Inverse CDF ``mu - b sgn(p-1/2) log(1-2|p-1/2|)`` evaluated in
-    double-double; distribution identical to :func:`sample_laplace`.
+    double-double (reference ``random/laplace.py:12-49``).
     """
     from . import dd as _dd
 
@@ -452,11 +347,12 @@ def gaussian_exact_vec(mu: np.ndarray, sigma_squared: float) -> np.ndarray:
     """Certified N(mu_i, sigma^2) draws, one per element of ``mu``.
 
     Box-Muller ``mu + sigma sqrt(-2 ln u) cos(2 pi v)`` in double-
-    double.  The transform differs from :func:`sample_gaussian`'s
-    erfinv inverse-CDF, but the OUTPUT law is the same: both are the
-    double-rounding pushforward of a true N(mu, sigma^2) real (erfinv
-    has no vectorizable certified form; Box-Muller needs only
-    log/sqrt/cos, which dd.py provides with rigorous error bounds).
+    double.  The transform differs from the reference's erfinv
+    inverse CDF (``random/continuous_gaussian.py:13-97``), but the
+    OUTPUT law is the same: the double-rounding pushforward of a true
+    N(mu, sigma^2) real (erfinv has no vectorizable certified form;
+    Box-Muller needs only log/sqrt/cos, which dd.py provides with
+    rigorous error bounds).
     """
     from . import dd as _dd
 

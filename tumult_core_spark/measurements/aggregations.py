@@ -921,15 +921,8 @@ class FusedMomentsMeasurement(Measurement):
             specs = []
             for s in stat_cols:
                 mech = self._mechs[s]
-                series_mech = AddNoiseToSeries(mech)
-                if series_mech.adds_no_noise:
-                    continue
-                out_type = (
-                    "double"
-                    if type(mech).__name__ in ("AddLaplaceNoise", "AddGaussianNoise")
-                    else "long"
-                )
-                specs.append((s, series_mech, out_type))
+                if not mech.adds_no_noise:
+                    specs.append((s, AddNoiseToSeries(mech), mech.output_type))
             known_rows = getattr(gdf, "n_keys", None)
             # public-key-bounded release: draw all three statistics'
             # noise driver-side over the frozen pre-noise aggregate —

@@ -1,10 +1,16 @@
-"""Additive noise mechanisms (scalar and vectorized).
+"""Additive noise mechanisms.
 
 ``AddLaplaceNoise`` / ``AddGeometricNoise`` / ``AddGaussianNoise`` /
-``AddDiscreteGaussianNoise`` operate on numpy scalars;
-``AddNoiseToSeries`` lifts any of them over a ``pd.Series`` in one
-vectorized NumPy call — the body of the Arrow-batched pandas UDF used
-by :class:`~.spark.AddNoiseToColumn`.
+``AddDiscreteGaussianNoise`` each have ONE sampler,
+``add_noise_to_array``: a certified vectorized sampler whose output is
+exactly the mechanism's law (the integer mechanisms use certified
+inversion / rejection in ``samplers.py``; the continuous mechanisms
+return the correctly rounded double of the true real-valued sample,
+via the double-double samplers in ``exact_sampling.py`` / ``dd.py``).
+Calling a mechanism on one value runs that same sampler on a length-1
+array.  ``AddNoiseToSeries`` lifts a mechanism over a ``pd.Series`` —
+the body of the Arrow-batched pandas UDF used by
+:class:`~.spark.AddNoiseToColumn`.
 
 Privacy functions (reference ``measurements/noise_mechanisms.py:38-560``):
 
@@ -13,27 +19,20 @@ Privacy functions (reference ``measurements/noise_mechanisms.py:38-560``):
 * Gaussian(sigma^2) / DiscreteGaussian(sigma^2): ``rho = d_in^2 /
   (2 sigma^2)`` (RhoZCDP)
 
-``scale == 0`` short-circuits to the identity — the deterministic mode
-correctness oracles rely on.  ALL FOUR mechanisms are exact on BOTH
-paths: the integer mechanisms use Fraction rejection samplers
-(scalar) and certified-inversion vectorized samplers (column, see
-``samplers.py``); the continuous mechanisms use rigorous interval
-inverse-CDF samplers (scalar) and certified double-double vectorized
-samplers (column, see ``exact_sampling.py`` / ``dd.py``) — the
-returned double is always the rounding of the true real-valued
-sample, closing the float-artifact vulnerability class on the grouped
-noisy-aggregate hot path as well.
+A noise parameter of 0 short-circuits to the identity — the
+deterministic mode correctness oracles rely on.
 """
 
 from __future__ import annotations
 
 from fractions import Fraction
-from typing import Any, Union
+from functools import cached_property
+from typing import Any
 
 import numpy as np
 import pandas as pd
 
-from .. import samplers
+from .. import exact_sampling, samplers
 from ..base import Measurement
 from ..domains import (
     NumpyFloatDomain,
@@ -41,226 +40,167 @@ from ..domains import (
     PandasSeriesDomain,
 )
 from ..exact_number import ExactNumber, ExactNumberInput
-from ..measures import PureDP, RhoZCDP
+from ..measures import Measure, PureDP, RhoZCDP
 from ..metrics import AbsoluteDifference
 
 
 class _NoiseMechanism(Measurement):
-    """Shared scalar-mechanism plumbing."""
+    """``value + noise`` over numpy scalars, with the noise parameter
+    held exactly (the subclass exposes it as ``scale`` / ``alpha`` /
+    ``sigma_squared``).  Subclasses supply the loss formula
+    (``_loss``) and the sampler (``add_noise_to_array``)."""
+
+    #: Spark SQL type of a noised value: ``"double"`` or ``"long"``.
+    output_type: str
+
+    def __init__(
+        self,
+        input_domain,
+        output_measure: Measure,
+        param_name: str,
+        param: ExactNumber,
+    ):
+        if param < 0:
+            raise ValueError(f"{param_name} must be >= 0")
+        if not isinstance(input_domain, (NumpyIntegerDomain, NumpyFloatDomain)):
+            raise ValueError(f"Unsupported domain {input_domain!r}")
+        super().__init__(input_domain, AbsoluteDifference(), output_measure)
+        self._param_name = param_name
+        self._param = param
+        # round the sampling parameter UP (reference
+        # noise_mechanisms.py:140,280,427): the privacy claim is
+        # computed from the exact parameter, so the implemented sampler
+        # must never use LESS noise than claimed
+        self._param_float = param.to_float(round_up=True)
+
+    @property
+    def adds_no_noise(self) -> bool:
+        return self._param == 0
+
+    @cached_property
+    def _param_fraction(self) -> Fraction:
+        """The exact rational parameter the integer samplers take.
+
+        A non-finite parameter (zero-budget noise from
+        ``calculate_noise_scale``) stays constructible for composition
+        and accounting, but there is no integer distribution with
+        infinite scale to sample from, so sampling raises."""
+        if not self._param.is_finite:
+            raise ValueError(
+                f"{type(self).__name__} cannot sample with infinite "
+                f"{self._param_name} (a zero budget admits no data-dependent "
+                "integer output)"
+            )
+        if self._param.is_rational:
+            return Fraction(self._param.expr.p, self._param.expr.q)
+        return Fraction(self._param_float)
+
+    def privacy_function(self, d_in: Any) -> ExactNumber:
+        d = ExactNumber(d_in)
+        if d < 0:
+            raise ValueError("d_in must be >= 0")
+        if self._param == 0:
+            return ExactNumber(float("inf")) if d > 0 else ExactNumber(0)
+        if not self._param.is_finite:
+            # infinite scale: the output is data-independent (integer
+            # sampling raises, the continuous mechanisms emit +-inf), so
+            # the loss is 0 for every d_in -- avoids oo/oo = nan
+            return ExactNumber(0)
+        return self._loss(d)
+
+    def _loss(self, d: ExactNumber) -> ExactNumber:
+        raise NotImplementedError
+
+    def __call__(self, value):
+        """One noised value: the vectorized sampler on a length-1 array
+        (``np.float64`` for the continuous mechanisms, ``np.int64`` for
+        the integer ones)."""
+        return self.add_noise_to_array(np.asarray([value]))[0]
 
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
-        """Vectorized noise over a float/int array (executor hot path)."""
+        """Noise every element of ``values`` independently."""
         raise NotImplementedError
 
 
 class AddLaplaceNoise(_NoiseMechanism):
     """value + Laplace(scale); epsilon = d_in / scale."""
 
+    output_type = "double"
+
     def __init__(self, input_domain, scale: ExactNumberInput):
         self.scale = ExactNumber(scale)
-        if self.scale < 0:
-            raise ValueError("scale must be >= 0")
-        if not isinstance(input_domain, (NumpyIntegerDomain, NumpyFloatDomain)):
-            raise ValueError(f"Unsupported domain {input_domain!r}")
-        super().__init__(input_domain, AbsoluteDifference(), PureDP())
-        # round the sampling scale UP (reference noise_mechanisms.py:140):
-        # the privacy claim is computed from the exact scale, so the
-        # implemented sampler must never use LESS noise than claimed
-        self._scale_float = self.scale.to_float(round_up=True)
+        super().__init__(input_domain, PureDP(), "scale", self.scale)
 
-    def privacy_function(self, d_in: Any) -> ExactNumber:
-        d = ExactNumber(d_in)
-        if d < 0:
-            raise ValueError("d_in must be >= 0")
-        if self.scale == 0:
-            return ExactNumber(float("inf")) if d > 0 else ExactNumber(0)
-        if not self.scale.is_finite:
-            return ExactNumber(0)  # data-independent output; see AddGeometricNoise
+    def _loss(self, d: ExactNumber) -> ExactNumber:
         return d / self.scale
 
-    def __call__(self, value) -> np.float64:
-        if self.scale == 0:
-            return np.float64(value)
-        # scalar path: floating-point-safe interval inverse-CDF sampler
-        # (reference random/laplace.py:12-49)
-        from .. import exact_sampling
-
-        return np.float64(exact_sampling.sample_laplace(float(value), self._scale_float))
-
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
-        if self.scale == 0:
+        if self.adds_no_noise:
             return values.astype(np.float64)
-        # certified vectorized sampler: same distribution as the
-        # scalar interval path (value inside the enclosure, so the
-        # final float addition is certified too, not rounded on top)
-        from .. import exact_sampling
-
         return exact_sampling.laplace_exact_vec(
-            values.astype(np.float64), self._scale_float
+            values.astype(np.float64), self._param_float
         )
 
 
 class AddGeometricNoise(_NoiseMechanism):
     """value + two-sided geometric(alpha); integer in, integer out."""
 
+    output_type = "long"
+
     def __init__(self, alpha: ExactNumberInput):
         self.alpha = ExactNumber(alpha)
-        if self.alpha < 0:
-            raise ValueError("alpha must be >= 0")
-        super().__init__(NumpyIntegerDomain(), AbsoluteDifference(), PureDP())
-        # round UP: never less noise than the exact-alpha claim
-        # (reference noise_mechanisms.py:280)
-        self._alpha_float = self.alpha.to_float(round_up=True)
-        # Non-finite alpha (eps=0 budgets via calculate_noise_scale)
-        # must stay constructible for composition/accounting; there is
-        # no two-sided-geometric with infinite scale to sample from, so
-        # sampling raises instead (matching the scale==0 special-case
-        # pattern rather than crashing in Fraction()).
-        self._alpha_frac = (
-            None
-            if not self.alpha.is_finite
-            else Fraction(self.alpha.expr.p, self.alpha.expr.q)
-            if self.alpha.is_rational
-            else Fraction(self._alpha_float)
-        )
+        super().__init__(NumpyIntegerDomain(), PureDP(), "alpha", self.alpha)
 
-    def privacy_function(self, d_in: Any) -> ExactNumber:
-        d = ExactNumber(d_in)
-        if d < 0:
-            raise ValueError("d_in must be >= 0")
-        if self.alpha == 0:
-            return ExactNumber(float("inf")) if d > 0 else ExactNumber(0)
-        if not self.alpha.is_finite:
-            # infinite scale: output is data-independent (sampling
-            # raises; the continuous analogues emit +-inf), so the
-            # privacy loss is 0 for every d_in -- avoids oo/oo = nan
-            return ExactNumber(0)
+    def _loss(self, d: ExactNumber) -> ExactNumber:
         return d / self.alpha
 
-    def __call__(self, value) -> np.int64:
-        if self.alpha == 0:
-            return np.int64(value)
-        if self._alpha_frac is None:
-            raise ValueError(
-                "Cannot sample two-sided geometric noise with infinite alpha "
-                "(an epsilon=0 budget admits no data-dependent integer output)"
-            )
-        # exact Fraction sampler on the scalar path
-        return np.int64(int(value) + samplers.geometric_exact(self._alpha_frac))
-
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
-        if self.alpha == 0:
+        if self.adds_no_noise:
             return values.astype(np.int64)
-        if self._alpha_frac is None:
-            raise ValueError(
-                "Cannot sample two-sided geometric noise with infinite alpha "
-                "(an epsilon=0 budget admits no data-dependent integer output)"
-            )
-        # exact certified-inversion sampler, vectorized (the column
-        # path matches the scalar path's distribution exactly)
         return values.astype(np.int64) + samplers.two_sided_geometric_exact_vec(
-            self._alpha_frac, len(values)
+            self._param_fraction, len(values)
         )
 
 
 class AddGaussianNoise(_NoiseMechanism):
     """value + N(0, sigma^2); rho = d_in^2 / (2 sigma^2) (zCDP)."""
 
+    output_type = "double"
+
     def __init__(self, input_domain, sigma_squared: ExactNumberInput):
         self.sigma_squared = ExactNumber(sigma_squared)
-        if self.sigma_squared < 0:
-            raise ValueError("sigma_squared must be >= 0")
-        if not isinstance(input_domain, (NumpyIntegerDomain, NumpyFloatDomain)):
-            raise ValueError(f"Unsupported domain {input_domain!r}")
-        super().__init__(input_domain, AbsoluteDifference(), RhoZCDP())
-        # round UP: never less noise than the exact-sigma^2 claim
-        # (reference noise_mechanisms.py:427,571)
-        self._ss_float = self.sigma_squared.to_float(round_up=True)
+        super().__init__(input_domain, RhoZCDP(), "sigma_squared", self.sigma_squared)
 
-    def privacy_function(self, d_in: Any) -> ExactNumber:
-        d = ExactNumber(d_in)
-        if d < 0:
-            raise ValueError("d_in must be >= 0")
-        if self.sigma_squared == 0:
-            return ExactNumber(float("inf")) if d > 0 else ExactNumber(0)
-        if not self.sigma_squared.is_finite:
-            return ExactNumber(0)  # data-independent output; see AddGeometricNoise
+    def _loss(self, d: ExactNumber) -> ExactNumber:
         return d**2 / (self.sigma_squared * 2)
 
-    def __call__(self, value) -> np.float64:
-        if self.sigma_squared == 0:
-            return np.float64(value)
-        # scalar path: certified interval inverse-CDF sampler
-        # (reference random/continuous_gaussian.py:13-97)
-        from .. import exact_sampling
-
-        return np.float64(
-            exact_sampling.sample_gaussian(self._ss_float, mu=float(value))
-        )
-
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
-        if self.sigma_squared == 0:
+        if self.adds_no_noise:
             return values.astype(np.float64)
-        # certified vectorized sampler (see AddLaplaceNoise)
-        from .. import exact_sampling
-
         return exact_sampling.gaussian_exact_vec(
-            values.astype(np.float64), self._ss_float
+            values.astype(np.float64), self._param_float
         )
 
 
 class AddDiscreteGaussianNoise(_NoiseMechanism):
     """value + discrete Gaussian(sigma^2); integer support (zCDP)."""
 
+    output_type = "long"
+
     def __init__(self, sigma_squared: ExactNumberInput):
         self.sigma_squared = ExactNumber(sigma_squared)
-        if self.sigma_squared < 0:
-            raise ValueError("sigma_squared must be >= 0")
-        super().__init__(NumpyIntegerDomain(), AbsoluteDifference(), RhoZCDP())
-        # round UP: never less noise than the exact-sigma^2 claim
-        # (reference noise_mechanisms.py:427,571)
-        self._ss_float = self.sigma_squared.to_float(round_up=True)
-        # see AddGeometricNoise: infinite scale (rho=0 budgets) stays
-        # constructible; sampling raises a clear error instead
-        self._ss_frac = (
-            None
-            if not self.sigma_squared.is_finite
-            else Fraction(self.sigma_squared.expr.p, self.sigma_squared.expr.q)
-            if self.sigma_squared.is_rational
-            else Fraction(self._ss_float)
+        super().__init__(
+            NumpyIntegerDomain(), RhoZCDP(), "sigma_squared", self.sigma_squared
         )
 
-    def privacy_function(self, d_in: Any) -> ExactNumber:
-        d = ExactNumber(d_in)
-        if d < 0:
-            raise ValueError("d_in must be >= 0")
-        if self.sigma_squared == 0:
-            return ExactNumber(float("inf")) if d > 0 else ExactNumber(0)
-        if not self.sigma_squared.is_finite:
-            return ExactNumber(0)  # data-independent output; see AddGeometricNoise
+    def _loss(self, d: ExactNumber) -> ExactNumber:
         return d**2 / (self.sigma_squared * 2)
 
-    def __call__(self, value) -> np.int64:
-        if self.sigma_squared == 0:
-            return np.int64(value)
-        if self._ss_frac is None:
-            raise ValueError(
-                "Cannot sample discrete Gaussian noise with infinite sigma^2 "
-                "(a rho=0 budget admits no data-dependent integer output)"
-            )
-        return np.int64(int(value) + samplers.discrete_gaussian_exact(self._ss_frac))
-
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
-        if self.sigma_squared == 0:
+        if self.adds_no_noise:
             return values.astype(np.int64)
-        if self._ss_frac is None:
-            raise ValueError(
-                "Cannot sample discrete Gaussian noise with infinite sigma^2 "
-                "(a rho=0 budget admits no data-dependent integer output)"
-            )
-        # exact certified-rejection sampler, vectorized
         return values.astype(np.int64) + samplers.discrete_gaussian_exact_vec(
-            self._ss_frac, len(values)
+            self._param_fraction, len(values)
         )
 
 
@@ -275,14 +215,6 @@ class AddNoiseToSeries(Measurement):
             AbsoluteDifference(),
             noise_mechanism.output_measure,
         )
-
-    @property
-    def adds_no_noise(self) -> bool:
-        m = self.noise_mechanism
-        for attr in ("scale", "alpha", "sigma_squared"):
-            if hasattr(m, attr):
-                return getattr(m, attr) == 0
-        return False
 
     def privacy_function(self, d_in: Any) -> Any:
         return self.noise_mechanism.privacy_function(d_in)

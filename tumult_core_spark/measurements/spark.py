@@ -134,20 +134,6 @@ class AddNoiseToColumn(SparkMeasurement):
     def privacy_function(self, d_in: Any) -> Any:
         return self.measurement.privacy_function(d_in)
 
-    def _out_type(self) -> str:
-        from .noise import AddGaussianNoise, AddLaplaceNoise
-
-        # Laplace/Gaussian emit continuous values; geometric/discrete
-        # Gaussian stay integral.
-        return (
-            "double"
-            if isinstance(
-                self.measurement.noise_mechanism,
-                (AddLaplaceNoise, AddGaussianNoise),
-            )
-            else "long"
-        )
-
     def __call__(self, data: DataFrame) -> DataFrame:
         """Grouped releases with a public-key row bound draw their
         noise DRIVER-side over the frozen pre-noise aggregate
@@ -160,10 +146,11 @@ class AddNoiseToColumn(SparkMeasurement):
             from ..utils.misc import freeze_noised_release
 
             inner = self.measurement
-            fn = None if inner.adds_no_noise else inner
+            mech = inner.noise_mechanism
+            fn = None if mech.adds_no_noise else inner
             frozen = freeze_noised_release(
                 data,
-                [(self.measure_column, fn, self._out_type())],
+                [(self.measure_column, fn, mech.output_type)],
                 self.known_release_rows,
             )
             if frozen is not None:
@@ -172,8 +159,8 @@ class AddNoiseToColumn(SparkMeasurement):
 
     def call_unsanitized(self, data: DataFrame) -> DataFrame:
         inner = self.measurement
-        out_type = self._out_type()
-        if inner.adds_no_noise:
+        out_type = inner.noise_mechanism.output_type
+        if inner.noise_mechanism.adds_no_noise:
             return data.withColumn(
                 self.measure_column, F.col(self.measure_column).cast(out_type)
             )

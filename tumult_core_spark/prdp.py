@@ -4,9 +4,8 @@ Parity with the reference's ``utils/prdp.py`` (Arb-based): smooth
 transformation mechanisms — sample a Gaussian centered on a monotone
 transform ``T(x + offset)`` and release ``T^{-1}(sample) - offset`` —
 plus the generalized Gaussian (shape 1/2, via Lambert W) and the
-exponential polylogarithmic distribution.  All sampling runs the same
-progressively-refined certified inverse-CDF loop as
-:mod:`tumult_core_spark.exact_sampling` (reference
+exponential polylogarithmic distribution.  All sampling runs one
+progressively-refined certified inverse-CDF loop (reference
 ``random/inverse_cdf.py:12-47``): draw more uniform bits, evaluate
 the inverse CDF over the dyadic p-interval in rigorous ``mpmath.iv``
 arithmetic, and stop once every real in the image rounds to one IEEE
@@ -23,7 +22,7 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from .exact_sampling import _erfinv_enclosure, _iv_erf, _randbits
+from .exact_sampling import _randbits
 
 
 def _sample_inverse_cdf(
@@ -60,14 +59,6 @@ def _sample_inverse_cdf(
             iv.prec = old_prec
 
 
-def _gaussian_iv(u, sigma, p_bits: int, n: int, iv, mpmath, prec: int):
-    """Certified N(u, sigma^2) inverse CDF over the dyadic p-interval
-    [p_bits, p_bits+1]/2^n: u + sigma sqrt(2) erfinv(2p - 1)."""
-    lo = _erfinv_enclosure(2 * p_bits - (1 << n), n, prec, iv, mpmath)
-    hi = _erfinv_enclosure(2 * (p_bits + 1) - (1 << n), n, prec, iv, mpmath)
-    return u + sigma * iv.sqrt(iv.mpf(2)) * iv.mpf([lo.a, hi.b])
-
-
 def _transformation_mechanism(x, offset, sigma, fwd, inv) -> float:
     """Shared body: Y ~ N(fwd(x+offset), sigma^2); release inv(Y)-offset."""
     if not sigma > 0:
@@ -76,7 +67,7 @@ def _transformation_mechanism(x, offset, sigma, fwd, inv) -> float:
     def icdf(bits, n, p, iv, mpmath, prec):
         shifted = iv.mpf(x) + iv.mpf(offset)
         u = fwd(shifted, iv)
-        g = _gaussian_iv(u, iv.mpf(sigma), bits, n, iv, mpmath, prec)
+        g = u + iv.mpf(sigma) * _phi_inv_iv(p, iv, mpmath, prec)
         return inv(g, iv) - iv.mpf(offset)
 
     return _sample_inverse_cdf(icdf)
@@ -179,9 +170,40 @@ def square_root_gaussian_mechanism(sigma: float) -> float:
     return _sample_inverse_cdf(icdf)
 
 
+def _erf_iv(y, iv):
+    """Rigorous interval enclosure of erf(y).
+
+    ``mpmath.iv.erf`` (hypergeometric 1F1) fails to converge for
+    moderate arguments, so this uses the cancellation-free series
+
+        erf(y) = (2/sqrt(pi)) y e^{-y^2} sum_k (2y^2)^k / (1*3*...*(2k+1))
+
+    whose terms are all positive; the truncation error is enclosed by
+    a geometric tail bound once the term ratio 2y^2/(2k+3) < 1/2.
+    Everything runs in iv arithmetic, so the result is certified.
+    """
+    two_y2 = iv.mpf(2) * y * y
+    term = iv.mpf(1)
+    total = iv.mpf(1)
+    k = 0
+    tiny = iv.mpf(1) / iv.mpf(1 << (iv.prec + 5))
+    while True:
+        k += 1
+        term = term * two_y2 / iv.mpf(2 * k + 1)
+        total = total + term
+        ratio = two_y2 / iv.mpf(2 * k + 3)
+        if ratio.b < 0.5 and term.b < tiny.a:
+            # tail <= term * ratio / (1 - ratio) <= term (since ratio < 1/2)
+            total = total + iv.mpf([0, term.b])
+            break
+        if k > 10000:
+            raise RuntimeError("erf series failed to converge")
+    return (iv.mpf(2) / iv.sqrt(iv.pi)) * y * iv.exp(-y * y) * total
+
+
 def _phi_iv(x, iv):
     """Unit-Gaussian CDF over an iv interval via the rigorous erf series."""
-    return (iv.mpf(1) + _iv_erf(x / iv.sqrt(iv.mpf(2)), iv)) / iv.mpf(2)
+    return (iv.mpf(1) + _erf_iv(x / iv.sqrt(iv.mpf(2)), iv)) / iv.mpf(2)
 
 
 def _phi_inv_iv(p, iv, mpmath, prec: int):
@@ -197,7 +219,7 @@ def _phi_inv_iv(p, iv, mpmath, prec: int):
         )
         for _ in range(80):
             wlo, whi = w - eps, w + eps
-            if _iv_erf(iv.mpf(wlo), iv).b <= y.a and _iv_erf(iv.mpf(whi), iv).a >= y.b:
+            if _erf_iv(iv.mpf(wlo), iv).b <= y.a and _erf_iv(iv.mpf(whi), iv).a >= y.b:
                 return iv.sqrt(iv.mpf(2)) * iv.mpf([wlo, whi])
             eps = eps * 2
     raise RuntimeError("interval erfinv failed to certify")
